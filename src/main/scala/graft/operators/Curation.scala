@@ -726,7 +726,12 @@ object Curation {
       explode(col("ts")).as("term") +: metaCols.map(col): _*)
     .groupBy(("id" +: "dl" +: "term" +: metaCols).map(col): _*)
     .agg(count(lit(1)).as("tf"))
-    .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets)).cast("int"))
+    .withColumn("bucket", termBucket(buckets))
+
+  /** The postings bucket of the `term` column — one expression for the
+    * writer and the probe's pushdown, so the two cannot drift. */
+  private def termBucket(buckets: Int): Column =
+    pmod(xxhash64(col("term")), lit(buckets)).cast("int")
 
   /** Metadata columns on the POSTINGS rows (r19) — what makes
     * [[bm25SearchIndexedMany]]'s `filter` a predicate over the pruned
@@ -777,10 +782,13 @@ object Curation {
     require(fs.rename(tmp, live), s"could not publish $live")
   }
 
+  /** [[writeStats]]'s row layout, stated so reads skip schema inference. */
+  private val statsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "n_docs BIGINT, sum_dl BIGINT, buckets INT, last_batch BIGINT, last_manual BIGINT")
+
   private def readStats(spark: org.apache.spark.sql.SparkSession,
       path: String): (Long, Long, Int, Long, Long) = {
-    val r = spark.read.parquet(s"$path/stats")
-      .select("n_docs", "sum_dl", "buckets", "last_batch", "last_manual").collect()(0)
+    val r = spark.read.schema(statsSchema).parquet(s"$path/stats").collect()(0)
     (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4))
   }
 
@@ -1645,19 +1653,18 @@ object Curation {
       k1: Double = 1.2, b: Double = 0.75,
       allowed: Option[DataFrame] = None,
       filter: Option[Column] = None): DataFrame = {
-    import spark.implicits._
     val (nDocs, avgdl, nBuckets, tombstones) = bm25Effective(spark, path)
     val qt = queries.select(col(qId).as("query_id"),
       explode(array_distinct(col(qTerms))).as("term"))
-    val terms = qt.select("term").distinct().collect().map(_.getString(0)).toSeq
+    // one collect of the query-sized frame gives both pushdown lists
+    val termRows = qt.select(col("term"), termBucket(nBuckets)).collect()
+    val terms = termRows.map(_.getString(0)).distinct.toSeq
     require(terms.nonEmpty, "need at least one query term across the batch")
-    val termBuckets = terms.toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int").as("bucket"))
-      .collect().map(_.getInt(0)).distinct.toSeq
+    val termBuckets = termRows.map(_.getInt(1)).distinct.toSeq
     val postingsPath = new org.apache.hadoop.fs.Path(s"$path/postings")
     val fs = postingsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tf0 = IndexMaintenance.consistentListing(fs, postingsPath) {
-      spark.read.parquet(s"$path/postings")
+      IndexMaintenance.readIndexTable(spark, postingsPath)
     }.filter(col("bucket").isin(termBuckets: _*) && col("term").isin(terms: _*))
     // tombstoned docs leave tf AND df, so scores equal a rebuilt index
     val tf = tombstones.map(t => tf0.join(t, Seq("id"), "left_anti")).getOrElse(tf0)
@@ -1699,7 +1706,9 @@ object Curation {
       .withColumn("rank", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("score").desc, col("id"))))
       .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
+      // top-k rows per query: one partition sorts them with no range-
+      // partitioning sample job
+      .repartition(1).sortWithinPartitions("query_id", "rank")
   }
 
   /** Reciprocal-rank fusion (RRF — Cormack, Clarke & Buettcher, SIGIR
@@ -1756,7 +1765,10 @@ object Curation {
         .orderBy(col("rrf_score").desc, col("id"))))
       .filter(col("fused_rank") <= topK)
       .drop("fused_rank")
-      .orderBy(col("query_id"), col("rrf_score").desc, col("id"))
+      // the fused rows are bounded by the input lists: one task sorts
+      // them, with no range-partitioning sample job and no extra shuffle
+      .coalesce(1)
+      .sortWithinPartitions(col("query_id"), col("rrf_score").desc, col("id"))
   }
 
   /** Word-bigram occurrences of a text column (NOT deduped — these are

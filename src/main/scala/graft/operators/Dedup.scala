@@ -820,32 +820,56 @@ object Dedup {
     verifyJaccard(candidates, sh, threshold, broadcastVerify)
   }
 
-  /** Connected components over a near-dup pair list by min-label
-    * propagation with pointer doubling — the final step of a dedup
-    * pipeline: pairs say "these are the same document"; components decide
-    * which single copy survives (the minimum id).
+  /** Connected components over a near-dup pair list — the final step of
+    * a dedup pipeline: pairs say "these are the same document";
+    * components decide which single copy survives (the minimum id).
     *
-    * Each round does (1) neighbor propagation (my label := min over my
-    * neighbors' labels) and (2) a label-shortcut join (my label := my
-    * label's label), so the reach roughly doubles per round and
-    * convergence is O(log diameter), not O(diameter) — `maxIters = 20`
-    * covers diameters beyond 2^20. Non-convergence is an error, never a
-    * silent component split: `keepOnePerComponent` downstream would
-    * otherwise quietly keep duplicates.
+    * Algorithm. The pair list becomes a cached edge table (both
+    * orientations) laid out at `ccParts` partitions, about one per 2 M
+    * edge rows.
+    *  - One partition (fewer than ~2 M edge rows) and integral ids: one
+    *    union-find pass over every edge ([[unionFindLabels]]) labels each
+    *    node with the minimum id of its component. One narrow stage, no
+    *    shuffle, no iteration, and the session conf is never touched.
+    *  - Otherwise: min-label propagation with pointer doubling, seeded
+    *    with each node's minimum neighbor. Each round does (1) neighbor
+    *    propagation (my label := min over my neighbors' labels) and (2) a
+    *    label-shortcut join (my label := my label's label), so reach
+    *    roughly doubles per round and convergence is O(log diameter)
+    *    rounds, not O(diameter).
     *
-    * Scale: each round is three shuffles on (node, label); lineage is cut
-    * with a checkpoint every round so long plans never build up. The
-    * DEFAULT cut is `localCheckpoint` — fastest, but its blocks live on
-    * executors and die with them, so on a real multi-executor cluster a
-    * lost executor fails the job mid-iteration. Pass `checkpointDir`
+    * `maxIters` bounds only that loop (20 covers diameters beyond 2^20);
+    * the one-partition path never iterates. Non-convergence is an
+    * error, never a silent component split: `keepOnePerComponent`
+    * downstream would otherwise quietly keep duplicates.
+    *
+    * Memory. The union-find task holds the `src <= dst` orientation of
+    * its edges (the other is redundant) in primitive arrays: two longs
+    * per edge, a sorted copy of both endpoints for the id → slot map, and
+    * one int per distinct node — at most ~40 bytes per undirected edge.
+    * It only runs on fewer than `ccEdgesPerPartition` edge rows (the
+    * graphs `ccParts` sizes to one partition), so it needs at most ~40 MB.
+    * The loop has no such task: its rounds are shuffles, which spill.
+    *
+    * Scale: each loop round is three shuffles on (node, label), run at
+    * `ccParts` shuffle partitions. The DataFrame API has no per-operator
+    * partition count for groupBy/join, so the loop scopes the session's
+    * `spark.sql.shuffle.partitions` to `ccParts` and restores it after,
+    * serialized on a private per-session lock so overlapping calls nest
+    * their save/restore correctly. Residual hazard, multi-partition only:
+    * OTHER queries submitted on the same session while a loop runs plan
+    * with `ccParts` shuffle partitions (their results are unaffected).
+    *
+    * Lineage is cut after the union-find pass and after every loop round.
+    * The DEFAULT cut is `localCheckpoint` — fastest, but its blocks live
+    * on executors and die with them, so on a real multi-executor cluster
+    * a lost executor fails the job mid-iteration. Pass `checkpointDir`
     * (HDFS/S3 path) to cut lineage with a RELIABLE cut instead: each
-    * round's labels are written to fault-tolerant storage as a parquet
-    * table and read back, so the iteration survives executor loss at
-    * the cost of one write+read of an (id, component) table per round —
-    * id-width rows, cheap relative to the round's three shuffles. Flip
-    * it for any run long enough that losing an executor is expected
-    * (i.e. every real 100 TB run); keep the default for local/short
-    * jobs.
+    * cut's labels are written to fault-tolerant storage as a parquet
+    * table and read back, so the iteration survives executor loss at the
+    * cost of one write+read of an (id, component) table per cut. Flip it
+    * for any run long enough that losing an executor is expected (i.e.
+    * every real 100 TB run); keep the default for local/short jobs.
     *
     * The reliable cut is self-managed (NOT `SparkContext.checkpoint`):
     * nothing session-wide is repointed, a round's table is deleted as
@@ -860,7 +884,19 @@ object Dedup {
     * Input: (id_a, id_b) pairs. Output: (id, component) for every id
     * that appears in any pair; component = min id reachable. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame =
+    connectedComponents(pairs, maxIters, checkpointDir, ccEdgesPerPartition)
+
+  /** Edge rows per connected-components partition: ~2 M 16-byte rows is
+    * ~32 MB, the 100 MB-1 GB post-shuffle band after the loop's join
+    * fan-out. Graphs below it take the one-task union-find path, whose
+    * memory it therefore bounds (~40 MB). */
+  private[operators] val ccEdgesPerPartition = 2000000L
+
+  /** [[connectedComponents]] with the partition sizing exposed, so specs
+    * can force the multi-partition loop on small graphs. */
+  private[operators] def connectedComponents(pairs: DataFrame, maxIters: Int,
+      checkpointDir: Option[String], edgesPerPartition: Long): DataFrame = {
     val spark = pairs.sparkSession
     val fs = checkpointDir.map { d =>
       new org.apache.hadoop.fs.Path(d)
@@ -879,7 +915,8 @@ object Dedup {
     def cut(df: DataFrame, round: Int): DataFrame =
       if (checkpointDir.isDefined) {
         df.write.mode("overwrite").parquet(roundPath(round))
-        val back = spark.read.parquet(roundPath(round))
+        // the schema is known: no footer-inference job on read-back
+        val back = spark.read.schema(df.schema).parquet(roundPath(round))
         dropRound(round - 1) // the new round is durable; its parent is dead weight
         back
       } else df.localCheckpoint()
@@ -892,40 +929,39 @@ object Dedup {
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .trackedPersist()
-    // r19 opt (guide §2.2/§2.4): size the iteration's shuffles to the
-    // EDGE COUNT, not the session's shuffle-partition constant. Each
-    // round is three exchanges over 16-byte (node, label) rows, and the
-    // checkpoint pins whatever partition count the round planned with —
-    // AQE cannot re-coalesce a checkpointed layout, so at bench scale
-    // every round dragged 32-64 near-empty tasks per stage (measured:
-    // most of neardup_survivors' wall was stage scheduling, StageLab
-    // r19). ~2 M edges per partition ≈ 32 MB rows — the guide's
-    // 100 MB-1 GB post-shuffle band after join fan-out — and the count
-    // is free: it materializes the edge cache the first round would
-    // have materialized anyway. The conf is scoped to the loop (the
-    // actions below all run inside it) and restored after; label values
-    // are partitioning-independent, so answers are unchanged.
-    val nEdges = edges.count()
+    val idType = edges.schema("src").dataType
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val integralIds = Seq(ByteType, ShortType, IntegerType, LongType).contains(idType)
+    // Size the layout to the EDGE COUNT, not the session's shuffle-
+    // partition constant (r19, guide §2.2/§2.4): a checkpoint pins the
+    // partition count its round planned with and AQE cannot re-coalesce
+    // it, so session-sized rounds dragged 32-64 near-empty tasks per
+    // stage. The count is free: it materializes the edge cache the
+    // next stage reads anyway. An RDD count is one stage;
+    // Dataset.count adds an aggregate exchange.
+    val nEdges = edges.rdd.count()
+    if (nEdges < edgesPerPartition && integralIds) {
+      // one partition's worth of rows, all in one task: the union-find
+      // labels are final. A narrow re-read of the cache, consumed once,
+      // so not re-persisted.
+      import spark.implicits._
+      val labels = cut(edges.coalesce(1)
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .select(col("src").cast(LongType), col("dst").cast(LongType))
+        .as[(Long, Long)]
+        .mapPartitions(unionFindLabels)
+        .select(col("_1").cast(idType).as("id"), col("_2").cast(idType).as("component")), 0)
+      edges.unpersist()
+      return labels
+    }
+    val ccParts = math.max(1L, math.min(nEdges / edgesPerPartition + 1L,
+      spark.sparkContext.defaultParallelism.toLong * 4L)).toInt
+    // A PRIVATE per-session lock, not the session's own monitor: Scala
+    // takes that for the session's lazy-val initialization, so holding
+    // it for the whole loop would block unrelated threads.
     val shuffleKey = "spark.sql.shuffle.partitions"
-    // ADVICE r19 hazard fix: this mutates the SESSION-global shuffle
-    // partition conf for the duration of the loop (the DataFrame API has
-    // no per-operator partition count for groupBy/join, and an explicit
-    // repartition per round would add a real exchange at every scale to
-    // dodge a local-mode hazard). Unsynchronized, two overlapping calls
-    // on one session could interleave save/restore and leave the conf
-    // permanently clobbered — the loop is serialized on a PRIVATE
-    // per-session lock (not the session's own monitor, which Scala also
-    // takes for the session's lazy-val initialization — hijacking it
-    // would block unrelated threads for the whole loop) so save/restore
-    // pairs nest correctly. Residual documented hazard: OTHER queries
-    // submitted concurrently on the same session while a loop runs plan
-    // with ccParts (their results are unaffected, only their shuffle
-    // width); callers sharing a session with latency-sensitive
-    // concurrent work should scope this call to a quiet window.
     ccConfLock(spark).synchronized {
     val savedShuffle = spark.conf.get(shuffleKey)
-    val ccParts = math.max(1L, math.min(nEdges / 2000000L + 1L,
-      spark.sparkContext.defaultParallelism.toLong * 4L)).toInt
     spark.conf.set(shuffleKey, ccParts.toString)
     try {
     // The edge cache inherits the PAIR pipeline's partitioning (at bench
@@ -985,6 +1021,53 @@ object Dedup {
     labels
     } finally spark.conf.set(shuffleKey, savedShuffle)
     }
+  }
+
+  /** Union-find over one partition's edge rows: `(node, minimum id of the
+    * node's component among these edges)` for every node the rows touch.
+    * Only the `src <= dst` orientation is kept (the edge table holds
+    * both), endpoints map to slots by binary search in their sorted,
+    * de-duplicated array, and a root always sits at its component's
+    * lowest slot — so, slots being in id order, at its minimum id. */
+  private def unionFindLabels(
+      edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var src = new Array[Long](1024)
+    var dst = new Array[Long](1024)
+    var n = 0
+    while (edges.hasNext) {
+      val e = edges.next()
+      if (e._1 <= e._2) {
+        if (n == src.length) {
+          src = java.util.Arrays.copyOf(src, n * 2)
+          dst = java.util.Arrays.copyOf(dst, n * 2)
+        }
+        src(n) = e._1; dst(n) = e._2; n += 1
+      }
+    }
+    val ids = new Array[Long](2 * n)
+    System.arraycopy(src, 0, ids, 0, n)
+    System.arraycopy(dst, 0, ids, n, n)
+    java.util.Arrays.sort(ids)
+    var m = 0
+    var i = 0
+    while (i < ids.length) {
+      if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, m)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    i = 0
+    while (i < n) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, m, src(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, m, dst(i)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 1
+    }
+    Iterator.tabulate(m)(k => (ids(k), ids(find(k))))
   }
 
   /** Survivors after near-dup removal: every id in `df` minus non-minimal

@@ -390,6 +390,41 @@ private[graft] object IndexMaintenance {
     fs.exists(dir) && fs.listStatus(dir)
       .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
 
+  /** `spark.read.parquet(table)` for a table this engine wrote, without
+    * Spark's schema-inference job: the data schema comes from ONE footer
+    * read on the driver (the Spark schema every parquet write records),
+    * found by a depth-first walk that stops at the first data file and
+    * skips the names Spark's listing hides (`_x`, `.x`). Partition
+    * columns are still discovered from the paths, exactly as an
+    * inferring read discovers them. Inference reads one footer too and
+    * assumes every file agrees, so the answer is the same; a table
+    * without a data file or a recorded schema falls back to it. Lists
+    * the table eagerly, like `spark.read.parquet` — call it inside
+    * [[consistentListing]]. */
+  private[operators] def readIndexTable(spark: SparkSession, table: Path): DataFrame = {
+    val fs = fsOf(spark, table)
+    def visible(p: Path) = {
+      val n = p.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    }
+    def firstDataFile(dir: Path): Option[Path] = {
+      val (files, dirs) = fs.listStatus(dir).filter(f => visible(f.getPath)).partition(_.isFile)
+      files.find(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
+        .orElse(dirs.iterator.map(d => firstDataFile(d.getPath)).collectFirst { case Some(p) => p })
+    }
+    // a missing table falls through to Spark's own path-not-found error
+    val schema = Some(table).filter(fs.exists).flatMap(firstDataFile).flatMap { f =>
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
+          spark.sparkContext.hadoopConfiguration))
+      try Option(in.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally in.close()
+    }.map(org.apache.spark.sql.types.DataType.fromJson(_)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+    schema.fold(spark.read)(spark.read.schema).parquet(table.toString)
+  }
+
   /** Fail-loud cap on tombstone-ledger rows materialized to the driver
     * (r20, the r19 verdict's ledgerAgg guard): every ledger consumer —
     * probe anti-joins (broadcast), [[Curation]]'s driver-memory

@@ -1016,8 +1016,9 @@ object Similarity {
     * via the centroid-taking overloads below. */
   def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect()
+    // nlist rows: sorted on the driver, not by a range-partitioned sort
+    spark.read.schema("cell INT, centroid ARRAY<DOUBLE>").parquet(s"$path/centroids")
+      .collect().sortBy(_.getInt(0))
       .map(r => r.getSeq[Double](1).toArray)
 
   /** Query a stored IVF index ([[writeIvfIndex]]). The probed-cell set
@@ -1097,8 +1098,9 @@ object Similarity {
         .withColumn("cell", explode(probeUdf(col("qv"))))
         .withColumn("qn", l2norm(col("qv")))
       // literal IN on the partition column -> static directory pruning
-      val probedCells = q.select("cell").distinct().collect().map(_.getInt(0))
-      // spark.read.parquet lists the table's files EAGERLY here, and that
+      // (the query frame is driver-small: de-duplicate on the driver)
+      val probedCells = q.select("cell").collect().map(_.getInt(0)).distinct
+      // the read lists the table's files EAGERLY here, and that
       // captured listing is what the scan executes against — so taking it
       // through the snapshot gate (marker + epoch validated on both sides,
       // retry on overlap; a live fold's marker window just delays it)
@@ -1107,7 +1109,7 @@ object Similarity {
       // a file deleted after the snapshot fails the task with
       // FileNotFoundException — retry the query.
       val c0 = IndexMaintenance.consistentListing(corpusFs, corpusPath) {
-        spark.read.parquet(s"$path/corpus")
+        IndexMaintenance.readIndexTable(spark, corpusPath)
       }.filter(col("cell").isin(probedCells.toSeq: _*))
       // the metadata predicate rides the same scan the cell IN-filter
       // prunes — Catalyst pushes it into the parquet read, so filtered

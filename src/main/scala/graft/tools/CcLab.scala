@@ -15,6 +15,13 @@ import graft.operators.Dedup
   * isolates the CC iteration, not the pair pipeline) and asserts the
   * label tables are identical.
   *
+  * What one call cuts depends on its size. Up to ~2 M edge rows (the
+  * pairs count twice, once per orientation) the components come from
+  * one union-find pass and are cut ONCE, so the A/B prices a single
+  * write+read of the label table. Larger graphs run the propagation
+  * loop and cut once per round; only that regime measures the
+  * per-round overhead.
+  *
   * Run: {{{ sbt "runMain graft.tools.CcLab /tmp/sf1 [reps]" }}}
   */
 object CcLab {

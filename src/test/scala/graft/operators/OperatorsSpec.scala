@@ -445,13 +445,22 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kept === Set(1L, 10L, 20L, 99L))
   }
 
-  test("connected components: 50-edge chain converges to one component") {
+  // The propagation loop (pointer doubling, non-convergence) only runs on
+  // more than one partition — a one-partition call's union-find pass is
+  // final — so the specs that test it force it with one edge row per
+  // partition, on the chain 0-1-...-50 scattered round-robin.
+  private def scatteredChain(): DataFrame = {
     val s = spark
     import s.implicits._
+    (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b").repartition(8)
+  }
+
+  test("connected components: 50-edge chain converges to one component") {
     // path graph 0-1-2-...-50: diameter 50 — min-label-only propagation
     // with 20 iters would silently split this; pointer doubling must not.
-    val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(chain).collect()
+    // Forced onto the loop (a one-partition call never iterates).
+    val comps = Dedup.connectedComponents(scatteredChain(), maxIters = 20,
+      checkpointDir = None, edgesPerPartition = 1L).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(comps.length === 51)
     assert(comps.forall(_._2 === 0L), "chain split into multiple components")
@@ -502,12 +511,11 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connected components: non-convergence deletes every reliable round table") {
-    val s = spark
-    import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt-nc").toString
-    val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val chain = scatteredChain()
     assertThrows[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIters = 2, checkpointDir = Some(dir)).collect()
+      Dedup.connectedComponents(chain, maxIters = 2, checkpointDir = Some(dir),
+        edgesPerPartition = 1L).collect()
     }
     val left = Option(new java.io.File(dir).listFiles).toSeq.flatten
       .filter(_.getName.startsWith("graft_cc_"))
@@ -515,11 +523,10 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("connected components: non-convergence throws, never splits silently") {
-    val s = spark
-    import s.implicits._
-    val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val chain = scatteredChain()
     assertThrows[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIters = 2).collect()
+      Dedup.connectedComponents(chain, maxIters = 2, checkpointDir = None,
+        edgesPerPartition = 1L).collect()
     }
   }
 
