@@ -88,7 +88,7 @@ object Bench {
     }
     // Cold pass FIRST (before the warm min-of-N loop warms anything): the ten
     // historically most expensive queries, one run each, persist registry
-    // + cache manager drained before the clock starts — the QueryLab
+    // + cache manager drained before the clock starts — the tools.Lab
     // discipline, reproduced in the driver artifact so round-over-round
     // diffs can separate plan changes from warm-cache/corpus noise (the
     // r9 +8.6% drift was unattributable from min-of-2 numbers alone).
@@ -150,9 +150,9 @@ object Bench {
       .option("header", "true").option("singleFile", "true")
       .save("/tmp/graft_bench/x1s/book.xlsx"))
     // one untimed warmup first: the univocity encode path has a steep
-    // JIT curve (PerfLab r14: 1.26 -> 0.83 s over five back-to-back
+    // JIT curve (r14 same-JVM A/B: 1.26 -> 0.83 s over five back-to-back
     // runs), so a bare min-of-3 can land entirely on the curve's early
-    // side — the r14 local run drew 449 K rows/s against PerfLab's
+    // side — the r14 local run drew 449 K rows/s against the A/B's
     // steady-state median of 668 K on the same box, same minute.
     li.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv("/tmp/graft_bench/c1")

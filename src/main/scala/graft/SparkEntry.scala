@@ -86,9 +86,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("xlsx_roundtrip")(spark, "/root/testdata/sf0.001")
 
+  /** Builds a name-keyed registry; a repeated name fails loudly instead
+    * of a Map literal silently keeping the last entry. */
+  private[graft] def registry[V](entries: (String, V)*): Map[String, V] = {
+    val dups = entries.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    require(dups.isEmpty, s"duplicate registry names: ${dups.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
+
   // lazy vals, not defs: Bench/Verify index these maps in loops — a def
   // would rebuild the whole ~100-entry map per lookup
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry(
 
     // ===== relational layer (SURVEY §2.3/§2.5 — Spark built-ins) =====
 
@@ -545,7 +553,7 @@ object SparkEntry {
       // Splittable-read fan-out (r19 opt, guide §6): the FileScan path
       // floors splits at `files.openCostInBytes` (4 MB), so a few-MB bz2
       // file decompressed on ONE task — 2.7 s of the query's wall at
-      // sf0.1 (StageLab). textFile's explicit minPartitions hands the
+      // sf0.1 (SCALE.md 19h). textFile's explicit minPartitions hands the
       // SplittableCompressionCodec the parallelism directly (readers
       // resync on the 48-bit block magic), scale-adaptively; at cluster
       // scale a 100 GB bz2 splits the same way. CAVEAT before copying
@@ -2530,7 +2538,7 @@ object SparkEntry {
          SELECT query_id, corpus_id, round(cos, 4) AS cosine, CAST(rnk AS INT) AS rank
          FROM ranked WHERE rnk <= 5"""
 
-  lazy val oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = registry(
 
     "project_filter" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, round(l_extendedprice, 2) AS price
@@ -3155,9 +3163,6 @@ object SparkEntry {
                                          ELSE 0.0 END) BETWEEN 2.0 AND 12.0
                               THEN 1.0 ELSE 0.5 END), 4) AS quality
          FROM documents""",
-
-    "doc_fingerprint" ->
-      "SELECT doc_id, md5(text) AS md5 FROM documents",
 
     "multimodal_meta" ->
       "SELECT doc_id, octet_length(encode(text)) AS n_bytes FROM documents",

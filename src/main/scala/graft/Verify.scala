@@ -17,13 +17,15 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
+        System.err.println(s"[verify] $name failed: $e")
       }
       // drain the dedup/curation persist registry after each query's
       // action: a 126-query replay otherwise pins every sketch
@@ -31,6 +33,8 @@ object Verify {
       // but there's no reason to carry them)
       finally graft.operators.Dedup.unpersistAll(spark)
     }
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] failed (${failed.size}): ${failed.sorted.mkString(", ")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Dedup}
 
 /** Same-JVM A/B harness for the r19 pin-vs-recompute questions (the
-  * PerfLab discipline: cross-run comparisons on this VM are noise, so
+  * paired-arm discipline: cross-run comparisons on this VM are noise, so
   * both arms run alternating in ONE session, min-of-N per arm, with a
   * row-count parity check between arms).
   *
